@@ -31,59 +31,66 @@ def spelling_alternatives(
     max_edit: int = 1,
     token_col: str = "token",
 ) -> DataFrame:
-    """(token, alt_token, distance, weight) for each probe token.
+    """Each probe row plus (alt_token, distance, weight), one row per
+    alternative.
 
-    probe_tokens: distinct tokens to expand (column ``token``).
-    vocab:        dictionary tokens (column ``token``).
+    probe_tokens: rows to expand (column ``token``). Every column is
+                  carried through and rows are not deduplicated, so a
+                  probe row can be a query position (query_id, qpos,
+                  token) and a token repeated across rows is expanded
+                  once per row. None may be named alt_token, distance
+                  or weight.
+    vocab:        dictionary tokens (column ``token``), DISTINCT by
+                  contract; an optional ``token_len`` column holding
+                  ``length(token)`` saves computing it per call.
 
     Exact-match short-circuit per the reference: a probe token present
     in the vocabulary yields only itself at weight 1.0; only absent
     tokens fan out to fuzzy matches at weight 1/(1+d).
+
+    One stream of broadcast joins with the probe rows streamed: no
+    union, no shuffle, so the output keeps the probe frame's
+    partitioning.
     """
-    probes = probe_tokens.select(token_col).distinct()
-    voc = vocab.select(F.col(token_col).alias("alt_token")).distinct()
-
-    exact = (
-        probes.join(voc, probes[token_col] == voc["alt_token"], "left_semi")
-        .select(
-            F.col(token_col),
-            F.col(token_col).alias("alt_token"),
-            F.lit(0).alias("distance"),
-            F.lit(1.0).alias("weight"),
+    # Expressions are SQL strings: this is the per-request path of the
+    # matcher, and one F.expr costs the driver 3 JVM round trips where
+    # each Column-DSL call (F.col, alias, ==, ...) costs about a dozen.
+    probe_cols = probe_tokens.columns
+    clash = {"alt_token", "distance", "weight", "alt_len", "__hit", "__cand_len"}
+    if clash & set(probe_cols):
+        raise ValueError(
+            f"probe columns {sorted(clash & set(probe_cols))} collide with the "
+            "output or internal columns; rename them first"
         )
-    )
-
-    misses = probes.join(
-        voc, probes[token_col] == voc["alt_token"], "left_anti"
-    )
+    tok = f"`{token_col}`"
+    alt_len = "token_len" if "token_len" in vocab.columns else f"length({tok})"
+    voc = vocab.select(F.expr(f"{tok} AS alt_token"), F.expr(f"{alt_len} AS alt_len"))
+    hits = vocab.select(F.expr(f"{tok} AS __hit"))
     # length blocking: lev(a,b) <= k  =>  |len(a)-len(b)| <= k
-    lens = F.array(
-        *[F.length(token_col) + F.lit(d) for d in range(-max_edit, max_edit + 1)]
-    )
-    blocked = (
-        misses.withColumn("cand_len", F.explode(lens))
-        .join(
-            F.broadcast(voc.withColumn("cand_len", F.length("alt_token"))),
-            "cand_len",
-        )
-        # banded 3-arg levenshtein (same early-exit form as
-        # autocomplete/scoring): O(len * band) per pair instead of the
-        # full DP; returns -1 past the band, so the filter keeps the
-        # same pair set with the same distances
+    lens = ", ".join(f"length({tok}) + {d}" for d in range(-max_edit, max_edit + 1))
+    # banded 3-arg levenshtein (same early-exit form as
+    # autocomplete/scoring): O(len * band) per pair instead of the full
+    # DP; -1 past the band, and NULL for a miss with no candidate of its
+    # length: the filter drops both
+    distance = f"IF(__hit IS NULL, levenshtein({tok}, alt_token, {max_edit}), 0)"
+    return (
+        probe_tokens.join(F.broadcast(hits), F.expr(f"{tok} = __hit"), "left")
+        # a hit gets no candidate lengths, so the outer join below
+        # leaves it one row, with no fuzzy alternative: the short-circuit
         .withColumn(
-            "distance",
-            F.levenshtein(F.col(token_col), F.col("alt_token"), max_edit),
+            "__cand_len", F.expr(f"explode_outer(IF(__hit IS NULL, array({lens}), NULL))")
         )
-        .filter(F.col("distance") >= 0)
+        # the vocabulary is distinct and each token has one length, so
+        # a probe row meets each candidate once: no distinct() needed
+        .join(F.broadcast(voc), F.expr("__cand_len = alt_len"), "left")
         .select(
-            token_col,
-            "alt_token",
-            "distance",
-            (F.lit(1.0) / (1.0 + F.col("distance"))).alias("weight"),
+            *probe_cols,
+            F.expr("coalesce(__hit, alt_token) AS alt_token"),
+            F.expr(f"{distance} AS distance"),
+            F.expr(f"1D / (1D + {distance}) AS weight"),
         )
-        .distinct()
+        .filter(F.expr("distance >= 0"))
     )
-    return exact.unionByName(blocked)
 
 
 def synonym_expand(

@@ -8,9 +8,19 @@ recognize spans (posting lookup with weight = altWeight x IDF, maximal
 adjacent runs, score = weight / entity total, threshold) -> top-k spans
 per (type, start).
 
-Batch-of-queries semantics: instead of one utterance per call, the
-whole `queries(query_id, text)` DataFrame flows through at once — the
-per-query loop of the reference becomes one relational plan.
+Build time (``build_matcher_index``, the reference's AddEntities +
+Compute, Matcher.cs:28-41 / EntitiesDictionary.cs:39-96) computes and
+materializes everything a request reads: the distinct vocabulary with
+token lengths and IDF, the posting with each token's IDF, and per-entity
+totals with type and phrase. The index no longer depends on the entity
+source once built.
+
+Per request (``interpret``) only the query side is computed. The whole
+``queries(query_id, text)`` DataFrame flows through at once — the
+per-query loop of the reference becomes one relational plan with one
+shuffle: the query tokens are hash-partitioned on query_id, every index
+table is broadcast, and every later aggregate and window is keyed on
+columns that include query_id, so nothing re-shuffles.
 """
 
 from __future__ import annotations
@@ -32,23 +42,45 @@ from entitymatch_spark.operators.spans import extend_spans, topk_spans
 
 @dataclass
 class MatcherIndex:
-    """Build-time artifacts (AddEntities + Compute, Matcher.cs:28-41)."""
+    """The entity dictionary (AddEntities + Compute, Matcher.cs:28-41).
 
-    entities: DataFrame   # (entity_id, type, phrase)
-    posting: DataFrame    # (entity_id, pos, token)
-    idf: DataFrame        # (token, df, idf)
-    totals: DataFrame     # (entity_id, total_weight)
-    vocab: DataFrame      # (token) — the spelling trie's vocabulary
+    Built once: tokenizing the phrases, the posting, IDF, entity totals
+    and the vocabulary are all computed by ``build_matcher_index`` and
+    materialized as local checkpoints of one partition each (every
+    request broadcasts them whole), so the index outlives its entity
+    source. A request computes only the query side: its tokens, their
+    alternatives, the broadcast joins against these tables, the spans
+    and the top-k.
+    """
+
+    vocab: DataFrame      # (token, df, idf, token_len) — one row per distinct token
+    posting: DataFrame    # (entity_id, pos, token, idf)
+    totals: DataFrame     # (entity_id, total_weight, type, phrase)
+
+
+def _materialize(df: DataFrame) -> DataFrame:
+    return df.coalesce(1).localCheckpoint(eager=True)
 
 
 def build_matcher_index(entities: DataFrame) -> MatcherIndex:
-    toks = entities.select("entity_id", tokenize("phrase").alias("tokens"))
+    """Tokenize, post, weigh and total the ``(entity_id, type, phrase)``
+    frame once; see MatcherIndex."""
+    # read by all three tables below: checkpointed so the source is read once
+    ents = entities.select("entity_id", "type", "phrase").localCheckpoint(eager=True)
+    toks = ents.select("entity_id", tokenize("phrase").alias("tokens"))
     posting = build_posting(toks, id_col="entity_id")
-    n = entities.count()
-    idf = token_idf(posting, n_docs=n)
-    totals = total_token_weight(posting, idf, "entity_id")
-    vocab = posting.select("token").distinct()
-    return MatcherIndex(entities, posting, idf, totals, vocab)
+    vocab = _materialize(
+        token_idf(posting, n_docs=ents.count()).withColumn(
+            "token_len", F.length("token")
+        )
+    )
+    weighted = _materialize(
+        posting.join(F.broadcast(vocab.select("token", "idf")), "token")
+    )
+    totals = _materialize(
+        total_token_weight(posting, vocab, "entity_id").join(ents, "entity_id")
+    )
+    return MatcherIndex(vocab=vocab, posting=weighted, totals=totals)
 
 
 def interpret(
@@ -64,14 +96,15 @@ def interpret(
     Defaults mirror the reference REPL (spansPerPosition=1,
     threshold=0.25; TestMatcher/Program.cs:39-40).
     """
+    # the plan's one shuffle: every join after it streams the query rows
+    # past a broadcast index table, and every aggregate and window is
+    # keyed on columns that include query_id, so nothing re-shuffles
     qtok = queries.select(
         "query_id", F.posexplode(tokenize("text")).alias("qpos", "token")
-    )
+    ).repartition("query_id")
     # --- alternatives chain (SynonymAlternatives(SpellingAlternatives(Base)))
-    probe = qtok.select("token").distinct()
-    spelled = spelling_alternatives(probe, index.vocab, max_edit=max_edit).select(
-        "token", "alt_token", "weight"
-    )
+    # expanded per query position
+    alts = spelling_alternatives(qtok, index.vocab, max_edit=max_edit)
     if synonyms is not None:
         # SynonymAlternatives is the OUTERMOST expander and *replaces* a
         # spelling alternative with its mapped synonyms, weights
@@ -79,52 +112,34 @@ def interpret(
         # the map yields only the mapped alternatives, so the map must
         # contain the identity to keep it, exactly as the reference's
         # own example does: mouse -> {mouse 1.0, mice 0.9},
-        # TestMatcher/Program.cs:279).
+        # TestMatcher/Program.cs:279). The outer join keeps an unmapped
+        # alternative as it is. A position may reach one alternative
+        # twice (two spellings mapping to one synonym); extend_spans
+        # keeps the max weight per (query, entity, diag, qpos), so no
+        # dedup is needed here.
         # NOTE: alternatives.synonym_expand is the KEEP-IDENTITY
-        # sibling of this replace-if-mapped block; the aliasing/
-        # broadcast shape is deliberately the same — if a fix lands in
-        # one (NULL keys, weight dedup), mirror it in the other.
+        # sibling of this replace-if-mapped join; both broadcast the
+        # map under internal aliases and neither dedups — if a fix
+        # lands in one (NULL keys), mirror it in the other.
         syn = synonyms.select(
-            F.col("token").alias("__k"),
-            F.col("alt_token").alias("__syn"),
-            F.col("weight").alias("__w"),
+            F.expr("token AS __k"), F.expr("alt_token AS __syn"), F.expr("weight AS __w")
         )
-        mapped = (
-            spelled.join(F.broadcast(syn), spelled["alt_token"] == F.col("__k"))
-            .select(
-                "token",
-                F.col("__syn").alias("alt_token"),
-                (spelled["weight"] * F.col("__w")).alias("weight"),
-            )
+        alts = alts.join(F.broadcast(syn), F.expr("alt_token = __k"), "left").select(
+            "query_id",
+            "qpos",
+            F.expr("IF(__k IS NULL, alt_token, __syn) AS alt_token"),
+            F.expr("IF(__k IS NULL, weight, weight * __w) AS weight"),
         )
-        unmapped = spelled.join(
-            F.broadcast(syn.select("__k").distinct()),
-            spelled["alt_token"] == F.col("__k"),
-            "left_anti",
-        ).select("token", "alt_token", "weight")
-        alts = (
-            unmapped.unionByName(mapped)
-            .groupBy("token", "alt_token")
-            .agg(F.max("weight").alias("weight"))
-        )
-    else:
-        alts = spelled
-    expanded_q = (
-        qtok.join(alts, "token")
-        .select(
-            "query_id", "qpos",
-            F.col("alt_token").alias("token"),
-            F.col("weight"),
-        )
-    )
+    expanded_q = alts.select("query_id", "qpos", F.expr("alt_token AS token"), "weight")
     spans = extend_spans(
-        expanded_q, index.posting, index.idf, index.totals, threshold=threshold
-    )
-    typed = spans.join(
-        F.broadcast(index.entities.select("entity_id", "type", "phrase")), "entity_id"
+        expanded_q,
+        F.broadcast(index.posting),
+        None,
+        index.totals,
+        threshold=threshold,
     )
     return topk_spans(
-        typed,
+        spans,
         k=spans_per_position,
         partition_cols=("query_id", "type", "start"),
     ).select("query_id", "entity_id", "type", "phrase", "start", "length", "score")

@@ -85,3 +85,62 @@ def test_threshold_and_topk(spark, index):
     # top-1 per (query, type, start): at most one span per start position
     starts = [(r["start"],) for r in out2]
     assert len(starts) == len(set(starts))
+
+
+def _rows(df):
+    return sorted(
+        (r["query_id"], r["entity_id"], r["start"], r["length"], round(r["score"], 12))
+        for r in df.collect()
+    )
+
+
+@pytest.mark.parametrize("with_synonyms", [False, True])
+def test_batch_equals_one_query_at_a_time(spark, index, synonyms, with_synonyms):
+    """Queries interpreted together over several partitions give the
+    rows each gives alone: expansion runs per query position, with no
+    dedup of probe tokens across positions or queries."""
+    texts = [
+        (1, "dark knight the dark knight"),  # tokens repeated in one query
+        (2, "the dark knigt rises"),         # 'dark', 'the' shared across queries
+        (3, "knigt mouse hunt"),             # typo 'knigt' shared with query 2
+        (4, "watch mouse"),
+    ]
+    syn = synonyms if with_synonyms else None
+    batch = spark.createDataFrame(
+        spark.sparkContext.parallelize(texts, 3), "query_id long, text string"
+    )
+    assert batch.rdd.getNumPartitions() == 3
+    together = _rows(
+        interpret(batch, index, synonyms=syn, spans_per_position=3, threshold=0.2)
+    )
+    alone = sorted(
+        row
+        for qid, text in texts
+        for row in _rows(
+            interpret(
+                spark.createDataFrame([(qid, text)], "query_id long, text string"),
+                index, synonyms=syn, spans_per_position=3, threshold=0.2,
+            )
+        )
+    )
+    assert together == alone
+    assert {r[0] for r in together} == {1, 2, 3, 4}
+
+
+def test_index_outlives_its_source(spark, tmp_path):
+    """The index is materialized at build time: deleting the entity
+    source afterwards leaves every request answerable."""
+    import shutil
+
+    src = str(tmp_path / "entities")
+    spark.createDataFrame(
+        [(0, "DVD", "The Dark Knight"), (1, "DVD", "Mouse Hunt")],
+        "entity_id long, type string, phrase string",
+    ).write.parquet(src)
+    index = build_matcher_index(spark.read.parquet(src))
+    shutil.rmtree(src)
+    q = spark.createDataFrame(
+        [(1, "the dark knigt"), (2, "mouse hunt")], "query_id long, text string"
+    )
+    got = {(r["query_id"], r["entity_id"]) for r in interpret(q, index).collect()}
+    assert got == {(1, 0), (2, 1)}

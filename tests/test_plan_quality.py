@@ -277,3 +277,51 @@ def test_remove_docs_broadcasts_delete_set(spark):
             "BroadcastHashJoin" in ln and "BuildRight" in ln for ln in anti
         ), anti
         assert "SortMergeJoin" not in plan
+
+
+def _final_plan(df) -> str:
+    """The executed plan after the action, without AQE's initial plan
+    (whose exchanges would otherwise be counted twice)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    return plan.toString()
+
+
+def test_interpret_single_shuffle(spark):
+    """A matcher request is one shuffle: the query tokens hash-partition
+    on query_id, the index tables are broadcast, and every aggregate and
+    window after the exchange is keyed on columns that include query_id.
+    ReusedExchange lines name the exchange they reuse, so they are not
+    counted."""
+    import re
+
+    from entitymatch_spark.plans.matcher import build_matcher_index, interpret
+
+    ents = spark.createDataFrame(
+        [(0, "DVD", "The Dark Knight"), (1, "DVD", "Dark Knight Rises"),
+         (2, "DVD", "Mouse Hunt"), (3, "DVD", "Mice Hunt")],
+        "entity_id long, type string, phrase string",
+    )
+    index = build_matcher_index(ents)
+    # spread over three partitions without a shuffle of its own
+    queries = spark.createDataFrame(
+        spark.sparkContext.parallelize(
+            [(1, "the dark knigt"), (2, "mouse hunt dark"), (3, "knight rises")], 3
+        ),
+        "query_id long, text string",
+    )
+    synonyms = spark.createDataFrame(
+        [("mouse", "mouse", 1.0), ("mouse", "mice", 0.9)],
+        "token string, alt_token string, weight double",
+    )
+    for syn in (None, synonyms):
+        df = interpret(queries, index, synonyms=syn, spans_per_position=3)
+        assert df.collect()
+        plan = _final_plan(df)
+        shuffles = [
+            line for line in plan.splitlines()
+            if re.search(r"(?<![A-Za-z])Exchange ", line) and "ReusedExchange" not in line
+        ]
+        assert len(shuffles) == 1, plan
+        assert re.search(r"Exchange hashpartitioning\(query_id#\d+L?, ", shuffles[0]), plan
