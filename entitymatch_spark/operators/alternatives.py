@@ -41,8 +41,11 @@ def spelling_alternatives(
                   once per row. None may be named alt_token, distance
                   or weight.
     vocab:        dictionary tokens (column ``token``), DISTINCT by
-                  contract; an optional ``token_len`` column holding
-                  ``length(token)`` saves computing it per call.
+                  contract: it is not deduplicated here, so a token
+                  listed twice yields every exact hit and fuzzy
+                  alternative of it twice. An optional ``token_len``
+                  column holding ``length(token)`` saves computing it
+                  per call.
 
     Exact-match short-circuit per the reference: a probe token present
     in the vocabulary yields only itself at weight 1.0; only absent
@@ -52,44 +55,43 @@ def spelling_alternatives(
     union, no shuffle, so the output keeps the probe frame's
     partitioning.
     """
-    # Expressions are SQL strings: this is the per-request path of the
-    # matcher, and one F.expr costs the driver 3 JVM round trips where
-    # each Column-DSL call (F.col, alias, ==, ...) costs about a dozen.
     probe_cols = probe_tokens.columns
-    clash = {"alt_token", "distance", "weight", "alt_len", "__hit", "__cand_len"}
+    clash = {"alt_token", "distance", "weight", "__hit", "__cand_len", "__alt_len"}
     if clash & set(probe_cols):
         raise ValueError(
             f"probe columns {sorted(clash & set(probe_cols))} collide with the "
             "output or internal columns; rename them first"
         )
-    tok = f"`{token_col}`"
-    alt_len = "token_len" if "token_len" in vocab.columns else f"length({tok})"
-    voc = vocab.select(F.expr(f"{tok} AS alt_token"), F.expr(f"{alt_len} AS alt_len"))
-    hits = vocab.select(F.expr(f"{tok} AS __hit"))
+    alt_len = F.col("token_len") if "token_len" in vocab.columns else F.length(token_col)
+    voc = vocab.select(F.col(token_col).alias("alt_token"), alt_len.alias("__alt_len"))
+    hits = vocab.select(F.col(token_col).alias("__hit"))
+    miss = F.col("__hit").isNull()
     # length blocking: lev(a,b) <= k  =>  |len(a)-len(b)| <= k
-    lens = ", ".join(f"length({tok}) + {d}" for d in range(-max_edit, max_edit + 1))
+    lens = F.array(
+        *[F.length(token_col) + F.lit(d) for d in range(-max_edit, max_edit + 1)]
+    )
     # banded 3-arg levenshtein (same early-exit form as
     # autocomplete/scoring): O(len * band) per pair instead of the full
     # DP; -1 past the band, and NULL for a miss with no candidate of its
     # length: the filter drops both
-    distance = f"IF(__hit IS NULL, levenshtein({tok}, alt_token, {max_edit}), 0)"
+    distance = F.when(
+        miss, F.levenshtein(F.col(token_col), F.col("alt_token"), max_edit)
+    ).otherwise(F.lit(0))
     return (
-        probe_tokens.join(F.broadcast(hits), F.expr(f"{tok} = __hit"), "left")
+        probe_tokens.join(F.broadcast(hits), F.col(token_col) == F.col("__hit"), "left")
         # a hit gets no candidate lengths, so the outer join below
         # leaves it one row, with no fuzzy alternative: the short-circuit
-        .withColumn(
-            "__cand_len", F.expr(f"explode_outer(IF(__hit IS NULL, array({lens}), NULL))")
-        )
+        .withColumn("__cand_len", F.explode_outer(F.when(miss, lens)))
         # the vocabulary is distinct and each token has one length, so
         # a probe row meets each candidate once: no distinct() needed
-        .join(F.broadcast(voc), F.expr("__cand_len = alt_len"), "left")
+        .join(F.broadcast(voc), F.col("__cand_len") == F.col("__alt_len"), "left")
         .select(
             *probe_cols,
-            F.expr("coalesce(__hit, alt_token) AS alt_token"),
-            F.expr(f"{distance} AS distance"),
-            F.expr(f"1D / (1D + {distance}) AS weight"),
+            F.coalesce(F.col("__hit"), F.col("alt_token")).alias("alt_token"),
+            distance.alias("distance"),
+            (F.lit(1.0) / (1.0 + distance)).alias("weight"),
         )
-        .filter(F.expr("distance >= 0"))
+        .filter(F.col("distance") >= 0)
     )
 
 

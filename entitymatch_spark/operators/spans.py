@@ -24,14 +24,14 @@ dropped below threshold. Top-k per (type, start) ordered by score desc
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
 def extend_spans(
     query_tokens: DataFrame,
     posting: DataFrame,
-    idf: DataFrame | None,
+    idf: DataFrame,
     totals: DataFrame,
     threshold: float = 0.0,
     query_id: str = "query_id",
@@ -40,8 +40,8 @@ def extend_spans(
     """Maximal adjacent-run spans of query tokens inside entities.
 
     query_tokens: (query_id, qpos, token [, weight])   weight defaults 1.0
-    posting:      (entity_id, pos, token [, idf])
-    idf:          (token, idf), or None when the posting carries idf
+    posting:      (entity_id, pos, token)
+    idf:          (token, idf [, ...])
     totals:       (entity_id, total_weight [, entity attributes...])
 
     Returns (query_id, entity_id, start, length, score) plus every
@@ -49,39 +49,41 @@ def extend_spans(
     phrase) ride along the totals join instead of needing another one.
 
     idf and totals are vocabulary/entity-count sized and broadcast. The
-    posting is joined as the caller hands it over: a large posting
-    shuffles with the query tokens on ``token``; a small one passed
-    under ``F.broadcast`` is streamed past. The max aggregate, the
-    island window and the span aggregate are all keyed on (query_id,
-    entity_id, diag, ...), so when the query tokens arrive
-    hash-partitioned on query_id and the posting is broadcast, the
-    whole operator runs without a shuffle.
+    posting join is left to the planner: a posting under the broadcast
+    threshold is broadcast, a larger one shuffles with the query tokens
+    on ``token``. The max aggregate, the island window and the span
+    aggregate are all keyed on (query_id, entity_id, diag, ...), so when
+    the query tokens arrive hash-partitioned on query_id and the posting
+    is broadcast, the whole operator runs without a shuffle.
     """
-    # SQL-string expressions: one F.expr costs the driver 3 JVM round
-    # trips where each Column-DSL call costs about a dozen, and this is
-    # the matcher's per-request path
-    qid, eid = f"`{query_id}`", f"`{entity_id}`"
     q = query_tokens
     if "weight" not in q.columns:
         q = q.withColumn("weight", F.lit(1.0))
-    cand = q.join(posting, "token")
-    if idf is not None:
-        cand = cand.join(F.broadcast(idf.select("token", "idf")), "token")
+    cand = (
+        q.join(posting.withColumnRenamed("pos", "epos"), "token")
+        .join(F.broadcast(idf.select("token", "idf")), "token")
+        .select(
+            query_id,
+            entity_id,
+            "qpos",
+            "epos",
+            (F.col("weight") * F.col("idf")).alias("wtok"),
+        )
+        .withColumn("diag", F.col("qpos") - F.col("epos"))
+    )
     # A query token may match the same (entity, epos) via several
     # alternatives: keep max weight (ref: Recognizer.cs:135-194 UnionSorted).
-    cand = cand.groupBy(
-        query_id, entity_id, F.expr("qpos - pos AS diag"), "qpos"
-    ).agg(F.expr("max(weight * idf) AS wtok"))
-    island = (
-        f"qpos - row_number() OVER (PARTITION BY {qid}, {eid}, diag ORDER BY qpos)"
+    cand = cand.groupBy(query_id, entity_id, "diag", "qpos").agg(
+        F.max("wtok").alias("wtok")
     )
+    w = Window.partitionBy(query_id, entity_id, "diag").orderBy("qpos")
     spans = (
-        cand.withColumn("island", F.expr(island))
+        cand.withColumn("island", F.col("qpos") - F.row_number().over(w))
         .groupBy(query_id, entity_id, "diag", "island")
         .agg(
-            F.expr("min(qpos) AS start"),
-            F.expr("count(*) AS length"),
-            F.expr("sum(wtok) AS span_weight"),
+            F.min("qpos").alias("start"),
+            F.count("*").alias("length"),
+            F.sum("wtok").alias("span_weight"),
         )
     )
     attrs = [c for c in totals.columns if c not in (entity_id, "total_weight")]
@@ -90,7 +92,7 @@ def extend_spans(
         entity_id,
         "start",
         "length",
-        F.expr("span_weight / total_weight AS score"),
+        (F.col("span_weight") / F.col("total_weight")).alias("score"),
         *attrs,
     )
     if threshold > 0.0:
@@ -125,13 +127,10 @@ def topk_spans(
             f"{spans.columns}; pass partition_cols= matching your "
             "frame (multi-query frames need 'query_id' in the group)"
         )
-    # a SQL-string window for the driver round trips, as in extend_spans
-    keys = ", ".join(f"`{c}`" for c in partition_cols)
-    order = ", ".join([f"`{order_col}` DESC"] + [f"`{c}` ASC" for c in tiebreak_cols])
+    order = [F.desc(order_col)] + [F.asc(c) for c in tiebreak_cols]
+    w = Window.partitionBy(*partition_cols).orderBy(*order)
     return (
-        spans.withColumn(
-            "rn", F.expr(f"row_number() OVER (PARTITION BY {keys} ORDER BY {order})")
-        )
-        .filter(F.expr(f"rn <= {int(k)}"))
+        spans.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
         .drop("rn")
     )

@@ -144,3 +144,36 @@ def test_index_outlives_its_source(spark, tmp_path):
     )
     got = {(r["query_id"], r["entity_id"]) for r in interpret(q, index).collect()}
     assert got == {(1, 0), (2, 1)}
+
+
+def test_index_over_broadcast_threshold_shuffles_posting(spark, index):
+    """A posting measured over the broadcast threshold at build time is
+    not hinted: requests shuffle-join it on token and give the same rows
+    as the broadcast index."""
+    ents = spark.createDataFrame(
+        [
+            (0, "DVD", "The Dark Knight"),
+            (1, "DVD", "Dark Knight Rises"),
+            (2, "DVD", "Mouse Hunt"),
+            (3, "DVD", "watch"),
+            (4, "DVD", "Mice Hunt"),
+        ],
+        "entity_id long, type string, phrase string",
+    )
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        big = build_matcher_index(ents)
+    finally:
+        spark.conf.set(key, before)
+    q = spark.createDataFrame(
+        [(1, "the dark knigt rises"), (2, "watch mouse hunt")],
+        "query_id long, text string",
+    )
+    shuffled = interpret(q, big, spans_per_position=3, threshold=0.2)
+    assert _rows(shuffled) == _rows(
+        interpret(q, index, spans_per_position=3, threshold=0.2)
+    )
+    plan = shuffled._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange hashpartitioning(token#" in plan, plan

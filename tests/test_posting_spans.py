@@ -161,6 +161,27 @@ def test_spelling_alternatives_trie_port(spark):
     assert all(got[("atch", a)] == (1, 0.5) for a in fuzzy)
 
 
+def test_spelling_alternatives_duplicate_vocab_passes_through(spark):
+    """The vocabulary is distinct by contract and not deduplicated: a
+    token listed twice yields its exact hit and each fuzzy alternative
+    to it twice. Probe rows are likewise expanded one by one."""
+    vocab = spark.createDataFrame(
+        [("match",), ("match",), ("watch",)], "token string"
+    )
+    probes = spark.createDataFrame(
+        [(1, "match"), (2, "hatch"), (3, "hatch")], "qid int, token string"
+    )
+    got = sorted(
+        (r["qid"], r["token"], r["alt_token"], r["distance"])
+        for r in spelling_alternatives(probes, vocab, max_edit=1).collect()
+    )
+    assert got == [
+        (1, "match", "match", 0), (1, "match", "match", 0),
+        (2, "hatch", "match", 1), (2, "hatch", "match", 1), (2, "hatch", "watch", 1),
+        (3, "hatch", "match", 1), (3, "hatch", "match", 1), (3, "hatch", "watch", 1),
+    ]
+
+
 def test_synonym_expand(spark):
     toks = spark.createDataFrame([("movie", 0.5), ("rock",  1.0)], "token string, weight double")
     syn = spark.createDataFrame(
